@@ -14,6 +14,10 @@ object SparkTestSession {
       // Matches Verify/Bench session defaults (SPJ planning for the V2
       // connector) so specs exercise the same planner config.
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
+      // Matches Verify/Bench: the generated-class cache holds 100 entries
+      // by default, too few for one pipeline batch's classes (a warm
+      // Engine batch then recompiles what it compiled a moment ago).
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       // Matches Verify/Bench: anchored warehouse, never cwd-relative.
       .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
       .config("spark.ui.enabled", "false")
